@@ -1637,8 +1637,9 @@ class _HuffLut:
 # distinct table per worker, not once per image.  BOUNDED (r16
 # ADVICE): each _HuffLut holds 128 KB, so adversarially varied DHT
 # segments would otherwise grow worker memory for the executor's
-# lifetime — past the cap the cache is cleared (rebuilding a LUT is
-# cheap relative to unbounded growth; real corpora reuse a handful).
+# lifetime — past the cap the OLDEST entry is evicted (FIFO: dicts
+# keep insertion order), so a stream of one-off tables never flushes
+# the handful a real corpus reuses.
 _HUFF_LUT_CACHE: dict = {}
 _HUFF_LUT_CACHE_MAX = 256  # ~32 MB worst case
 
@@ -1648,7 +1649,7 @@ def _huff_lut(bits, vals) -> _HuffLut:
     t = _HUFF_LUT_CACHE.get(key)
     if t is None:
         if len(_HUFF_LUT_CACHE) >= _HUFF_LUT_CACHE_MAX:
-            _HUFF_LUT_CACHE.clear()
+            del _HUFF_LUT_CACHE[next(iter(_HUFF_LUT_CACHE))]
         t = _HUFF_LUT_CACHE[key] = _HuffLut(bits, vals)
     return t
 

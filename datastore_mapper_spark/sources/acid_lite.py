@@ -12,12 +12,20 @@ This module implements them the way the real formats do:
   those files to ``spark.read.parquet`` — a reader that started on
   vN keeps a consistent snapshot no matter how many commits land
   after it (files are immutable and never deleted by commits).
-* **Atomic exclusive commits.**  A commit writes its data files
-  first, then creates ``v{N}.json`` with ``O_CREAT|O_EXCL`` — the
-  POSIX primitive that makes exactly ONE winner when two writers race
-  to the same version (the loser gets ``FileExistsError`` →
-  :class:`CommitConflict`, re-reads the new latest, and retries or
-  surrenders — optimistic concurrency, same protocol as Delta).
+* **One commit path: plan → check → publish.**  Every commit writes
+  its data files first, then goes through :func:`_commit_loop`.  Each
+  attempt reads the latest manifest once and hands it to the
+  operation's *plan*, which checks for logical conflicts (raising
+  :class:`ConcurrentModification`) and returns the child's file list
+  plus the manifest keys it changes.  :func:`_commit` then publishes
+  ``v{N}.json`` with ``O_CREAT|O_EXCL`` — the POSIX primitive that
+  makes exactly ONE winner when two writers race to the same version.
+  The loser gets :class:`CommitConflict` internally and re-plans
+  against the new latest, at most :data:`COMMIT_RETRIES` times
+  (optimistic concurrency, the Delta protocol).  The carry-forward
+  rule lives in one place, :data:`_CARRIED`: a child copies each of
+  those keys from its parent unless the commit names it, so no commit
+  kind can shed table metadata (mapping, constraints, txns, ...).
 * **Copy-on-write MERGE with file-level pruning.**  ``merge_upsert``
   joins the source keys against ``input_file_name()`` to find the set
   of data files that CONTAIN matched keys; only those files are
@@ -49,9 +57,9 @@ This module implements them the way the real formats do:
   :func:`count_rows` (metadata-only COUNT from per-file footer row
   counts), :func:`replace_where` (atomic range backfill),
   :func:`optimize_zorder` (Morton-clustered committed rewrite),
-  :func:`_rebase_commit` — LOGICAL conflict detection: commits rebase
-  past concurrent commits that left their touched files intact;
-  only same-file edits raise :class:`ConcurrentModification` — and
+  LOGICAL conflict detection (file edits rebase past concurrent
+  commits that left their touched files intact; only same-file edits
+  raise :class:`ConcurrentModification`) and
   :func:`delete_where_dv`, DELETION VECTORS (Iceberg-v2 position
   deletes / Delta DVs): merge-on-read deletes whose write cost is
   proportional to the deleted rows, applied by every read via a
@@ -94,25 +102,51 @@ class ConstraintViolation(Exception):
 #: includes None (a table with no column mapping).
 _UNSET = object()
 
+#: Version races one commit may lose before :class:`CommitConflict`
+#: reaches the caller.
+COMMIT_RETRIES = 3
+
+
+def _commit_loop(path: str, op: str, plan, create: bool = False) -> int:
+    """The ONE commit path.  Each attempt reads the latest manifest
+    once and calls ``plan(parent, pm)``.  The plan raises
+    :class:`ConcurrentModification` (or ``ValueError``) when the
+    operation no longer applies to the latest snapshot, returns an
+    ``int`` (an already-committed version) when there is nothing to
+    publish, or returns the child: its ``files`` (default: the
+    parent's) plus the keyword arguments of :func:`_commit`.  Losing
+    the version race re-plans against the new latest, at most
+    :data:`COMMIT_RETRIES` times.  ``create`` admits the first commit
+    of a table (parent 0); every other operation needs the table."""
+    for _ in range(COMMIT_RETRIES + 1):
+        parent = latest_version(path)
+        if parent == 0 and not create:
+            raise ValueError(f"table does not exist: {path}")
+        pm = _read_manifest(path, parent) if parent else {}
+        child = plan(parent, pm)
+        if isinstance(child, int):
+            return child
+        files = child.pop("files", pm.get("files") or [])
+        try:
+            _commit(path, parent + 1, files, parent, op, **child)
+            return parent + 1
+        except CommitConflict:
+            continue  # version race only: re-plan on the new latest
+    raise CommitConflict(f"{op} at {path} lost {COMMIT_RETRIES + 1} races")
+
 
 def _rebase_commit(path: str, touched: list[str], new_files: list[str],
-                   op: str, retries: int = 3,
-                   purge_dvs: bool = False,
-                   expect_dvs: list[str] | None = None,
-                   new_partitions: dict | None = None,
-                   add_dvs: list[str] | None = None,
-                   add_dv_rows: int = 0,
-                   schema: str | None = None,
+                   op: str, expect_dvs: list[str] | None = None,
                    expect_schema: str | None = None,
-                   mapping: dict | None = None,
                    expect_mapping=_UNSET,
                    expect_present: list[str] | None = None,
-                   dropped_physical: list[str] | None = None) -> int:
-    """Commit a file-level edit (remove ``touched``, add ``new_files``)
-    with LOGICAL conflict detection: losing the version race to a
-    commit that left every touched file in place (e.g. a concurrent
-    append, or an edit of disjoint files) is NOT a conflict — the edit
-    rebases onto the new latest and commits without redoing its data
+                   **changes) -> int:
+    """Commit a file-level edit (remove ``touched``, add ``new_files``;
+    ``changes`` are further :func:`_commit` keys) with LOGICAL conflict
+    detection, as one plan of :func:`_commit_loop`: losing the version
+    race to a commit that left every touched file in place (e.g. a
+    concurrent append, or an edit of disjoint files) is NOT a conflict
+    — the edit rebases onto the new latest without redoing its data
     work.  Only a racer that removed one of OUR touched files raises
     :class:`ConcurrentModification` (the caller must re-plan).  This
     is Delta/Iceberg optimistic concurrency: version numbers collide,
@@ -123,22 +157,22 @@ def _rebase_commit(path: str, touched: list[str], new_files: list[str],
     removes no files — file-set comparison alone cannot see it — but
     a rebase past it would commit data recomputed from pre-delete
     rows (row resurrection), so a DV delta is a conflict too, exactly
-    as Delta/Iceberg treat DV-vs-rewrite races (round-11 ADVICE).
+    as Delta/Iceberg treat DV-vs-rewrite races.
 
     ``expect_schema`` is the schema the caller PLANNED against: a
     caller COMMITTING a schema of its own (WAP publish of a staged
     evolution) must lose to a concurrent metadata-only evolution on
     the target — file-set comparison cannot see one, and rebasing
     past it would silently overwrite the concurrent evolution with
-    the staged schema (round-13 ADVICE).  Checked per attempt, inside
-    the loop, so there is no check-then-commit window.
+    the staged schema.  Checked per attempt, inside the plan, so there
+    is no check-then-commit window.
 
     ``expect_mapping`` (sentinel-defaulted: ``None`` is a legal
     expectation) is the logical->physical column mapping the caller
     planned against — the same guard as ``expect_schema`` for a
     caller that COMMITS a mapping of its own, so a concurrent
     rename/drop re-keying the mapping is a conflict rather than a
-    silent overwrite (round-14 ADVICE).
+    silent overwrite.
 
     ``expect_present`` lists files the caller's data work DEPENDS on
     but does not remove — a MoR writer's DV keys positions inside
@@ -146,9 +180,8 @@ def _rebase_commit(path: str, touched: list[str], new_files: list[str],
     of them would orphan the vector and resurrect rows.  Their
     disappearance is a conflict; compatible appends still rebase."""
     removed = set(touched)
-    for _ in range(retries + 1):
-        cur = latest_version(path)
-        cm = _read_manifest(path, cur)
+
+    def plan(_parent: int, cm: dict) -> dict:
         if expect_schema is not None and cm.get("schema") != expect_schema:
             raise ConcurrentModification(
                 f"schema changed under this {op} (a concurrent schema "
@@ -183,16 +216,9 @@ def _rebase_commit(path: str, touched: list[str], new_files: list[str],
                 "re-run against the new snapshot"
             )
         kept = [f for f in cm["files"] if f not in removed]
-        dvs = add_dvs if add_dvs else ([] if purge_dvs else None)
-        try:
-            _commit(path, cur + 1, sorted(kept) + sorted(new_files),
-                    cur, op, dvs=dvs, dv_rows=add_dv_rows,
-                    partitions=new_partitions, schema=schema,
-                    mapping=mapping, dropped_physical=dropped_physical)
-            return cur + 1
-        except CommitConflict:
-            continue  # version race only: rebase again
-    raise CommitConflict(f"{op} at {path} lost {retries + 1} races")
+        return {"files": sorted(kept) + sorted(new_files), **changes}
+
+    return _commit_loop(path, op, plan)
 
 
 def _manifest_dir(path: str) -> str:
@@ -600,19 +626,19 @@ def _file_stats(path: str, rel: str) -> dict | None:
 
 def _assemble_stats_partitions(
     path: str, files: list[str], schema: str | None,
-    parent_stats: dict, parent_partitions: dict,
-    partition_by: list[str] | None, partitions: dict | None,
+    known_stats: dict, known_parts: dict,
+    partition_by: list[str] | None,
     specs: dict | None = None, file_spec: dict | None = None,
 ) -> tuple[dict, dict]:
-    """Per-file (stats, partition-values) maps for a commit: carried
-    files inherit the parent's entries (files are immutable, so
-    neither goes stale); new files get footer stats read once plus
-    their partition values from the writer.  Partition values are
-    ALSO injected into stats as exact [v, v] ranges, typed per the
-    manifest schema, so the ordinary stats comparator
-    (:func:`prune_files`) partition-prunes with zero new code —
-    identity-transform Iceberg partitioning expressed in the same
-    metadata the min/max skipping already uses.
+    """Per-file (stats, partition-values) maps for a commit: files
+    with a known entry (carried from the parent, or copied from the
+    snapshot a restore/clone reproduces) keep it — files are
+    immutable, so neither goes stale; other files get footer stats
+    read once.  Partition values are ALSO injected into stats as exact
+    [v, v] ranges, typed per the manifest schema, so the ordinary
+    stats comparator (:func:`prune_files`) partition-prunes with zero
+    new code — identity-transform Iceberg partitioning expressed in
+    the same metadata the min/max skipping already uses.
 
     With PARTITION-SPEC EVOLUTION (``specs`` + ``file_spec``,
     :func:`set_partition_spec`) each file's partition values belong
@@ -620,7 +646,6 @@ def _assemble_stats_partitions(
     the values-present check both consult the file's own spec — a
     file written while the table was flat legally carries no values
     even though the current default spec is partitioned."""
-    new_parts = partitions or {}
     # Derived-name -> SQL type over ALL specs in the table's history:
     # derived names embed their transform parameters (o_orderkey_bucket8),
     # so a cross-spec name collision implies an identical transform and
@@ -641,10 +666,10 @@ def _assemble_stats_partitions(
         own_spec = partition_by
         if specs is not None and file_spec is not None:
             own_spec = specs.get(file_spec.get(f)) or []
-        s = parent_stats.get(f, ...)
+        s = known_stats.get(f, ...)
         if s is ...:
             s = _file_stats(path, f)
-        pvals = parent_partitions.get(f) or new_parts.get(f)
+        pvals = known_parts.get(f)
         if own_spec and pvals is None:
             # a flat-written file can never join a partitioned layout
             # (e.g. an append that raced the partitioned create): the
@@ -666,158 +691,91 @@ def _assemble_stats_partitions(
     return stats, out_parts
 
 
-def _commit(path: str, version: int, files: list[str],
-            parent: int, op: str, schema: str | None = None,
-            dvs: list[str] | None = None, dv_rows: int = 0,
-            partition_by: list[str] | None = None,
-            partitions: dict | None = None,
-            specs: dict | None = None,
-            default_spec: str | None = None,
-            mapping: dict | None = None,
-            dropped_physical: list[str] | None = None,
-            constraints: dict | None = None,
-            generated: dict | None = None,
-            bloom_index: dict | None = None,
-            sort_order: list | None = None,
-            ndv_sketch: dict | None = None,
-            defaults: dict | None = None,
-            identity: dict | None = None) -> None:
-    """Atomically publish manifest ``version`` (O_EXCL = one winner).
-    ``schema`` (a DDL string) makes zero-file versions readable — an
-    empty table is a legal snapshot, not an error.
+#: The carry-forward rule of every commit, in one place: a child
+#: manifest copies each of these keys from its parent unless the
+#: commit names it, and a named empty value clears the key.  The two
+#: sidecar maps ({column: {file: sidecar}}) then drop entries for
+#: files the child no longer lists.  Everything else is rebuilt per
+#: commit: version/parent/op/ts, the per-file stats/partitions/
+#: file_spec maps, and the one-commit tags txn/restore_of/clone_of.
+_CARRIED = ("schema", "partition_by", "specs", "default_spec", "mapping",
+            "dropped_physical", "constraints", "generated", "defaults",
+            "identity", "sort_order", "txns", "dvs", "dv_rows",
+            "bloom_index", "ndv_sketch")
+_TAGS = ("txn", "restore_of", "clone_of")
 
-    Each manifest also carries per-file column min/max stats
-    (``stats``): carried-over files inherit the parent's entry
-    (files are immutable, so stats never go stale); newly written
-    files get theirs read from the parquet footer once, at commit
-    time.  Driver-side cost is file-count-sized, same as the file
-    list itself — the Iceberg manifest-entry shape.  Partitioned
-    tables additionally carry ``partition_by`` (the layout, fixed at
-    create) and per-file ``partitions`` values (``partitions`` arg =
-    the NEWLY written files' values; carried files inherit)."""
-    parent_stats: dict = {}
-    parent_txns: dict = {}
-    parent_partitions: dict = {}
-    parent_fspec: dict = {}
-    if parent:
-        pm = _read_manifest(path, parent)
-        if schema is None:
-            schema = pm.get("schema")
-        if partition_by is None:
-            partition_by = pm.get("partition_by")
-        if specs is None:
-            specs = pm.get("specs")
-            default_spec = pm.get("default_spec")
-        if mapping is None:
-            mapping = pm.get("mapping")
-        if dropped_physical is None:
-            dropped_physical = pm.get("dropped_physical")
-        if constraints is None:
-            # CHECK constraints carry through every commit kind; an
-            # explicit {} (drop_constraint) clears them
-            constraints = pm.get("constraints")
-        if generated is None:
-            generated = pm.get("generated")
-        if defaults is None:
-            # initial-defaults carry through every commit kind (the
-            # pre-evolution file population only shrinks)
-            defaults = pm.get("defaults")
-        if identity is None:
-            # identity high-waters carry through non-stamping commits
-            identity = pm.get("identity")
-        if sort_order is None:
-            sort_order = pm.get("sort_order")
-        if ndv_sketch is None:
-            ni = pm.get("ndv_sketch") or {}
-            fset2 = set(files)
-            ndv_sketch = {
-                c: {f: sc for f, sc in fm.items() if f in fset2}
-                for c, fm in ni.items()
-            } or None
-        if bloom_index is None:
-            # carry sidecar maps, DROPPING entries for removed files
-            bi = pm.get("bloom_index") or {}
-            fset = set(files)
-            bloom_index = {
-                c: {f: sc for f, sc in fm.items() if f in fset}
-                for c, fm in bi.items()
-            } or None
-        parent_stats = pm.get("stats") or {}
-        parent_txns = pm.get("txns") or {}
-        parent_partitions = pm.get("partitions") or {}
-        parent_fspec = pm.get("file_spec") or {}
-    file_spec = None
-    if specs is not None:
-        # spec-evolved table: every file is tagged with the spec that
-        # wrote it — carried files keep their tag, new files take the
-        # current default spec (Iceberg spec-id semantics).  On the
-        # FIRST evolution the parent has no tags: its whole history is
-        # the implicit spec the evolution materialized as "1".
-        parent_files = set(pm["files"]) if parent else set()
-        fallback_old = (pm.get("default_spec") or "1") if parent else "1"
+
+def _commit(path: str, version: int, files: list[str], parent: int,
+            op: str, partitions: dict | None = None,
+            stats: dict | None = None, file_spec: dict | None = None,
+            **named) -> None:
+    """Publish manifest ``version`` as the child of ``parent`` — the
+    ONLY manifest write, an O_EXCL create (one winner per version; the
+    loser gets :class:`CommitConflict`).  Keys follow :data:`_CARRIED`;
+    ``named`` holds the keys this commit sets, plus any of
+    :data:`_TAGS`.  ``schema`` (a DDL string) makes zero-file versions
+    readable — an empty table is a legal snapshot, not an error.
+
+    Each manifest also carries per-file column min/max ``stats`` and,
+    on partitioned tables, per-file ``partitions`` values: carried
+    files inherit the parent's entries; other files take the entries
+    passed here (new files' partition values from the writer, or the
+    copied snapshot of a restore/clone), and stats not known either
+    way are read once from the parquet footer.  Driver-side cost is
+    file-count-sized, the Iceberg manifest-entry shape.  Spec-evolved
+    tables tag every file with the spec that wrote it (``file_spec``,
+    Iceberg spec-id semantics): carried files keep their tag, new
+    files take the default spec."""
+    unknown = set(named) - set(_CARRIED) - set(_TAGS)
+    if unknown:
+        raise TypeError(f"_commit got unknown manifest keys {unknown}")
+    pm = _read_manifest(path, parent) if parent else {}
+    meta = {k: named[k] if k in named else pm.get(k) for k in _CARRIED}
+    fset = set(files)
+    for k in ("bloom_index", "ndv_sketch"):
+        meta[k] = {c: {f: sc for f, sc in fm.items() if f in fset}
+                   for c, fm in (meta[k] or {}).items()}
+    specs = meta["specs"]
+    if specs:
+        # on the FIRST evolution the parent has no tags: its whole
+        # history is the implicit spec the evolution materialized as "1"
+        old_tags = pm.get("file_spec") or {}
+        copied = file_spec or {}
+        old_default = pm.get("default_spec") or "1"
+        parent_files = set(pm.get("files") or [])
         file_spec = {
-            f: parent_fspec.get(
-                f, fallback_old if f in parent_files else default_spec)
+            f: old_tags.get(f) or copied.get(f)
+            or (old_default if f in parent_files else meta["default_spec"])
             for f in files
         }
+    else:
+        file_spec = None
     stats, out_parts = _assemble_stats_partitions(
-        path, files, schema, parent_stats, parent_partitions,
-        partition_by, partitions, specs=specs, file_spec=file_spec)
+        path, files, meta["schema"],
+        {**(stats or {}), **(pm.get("stats") or {})},
+        {**(partitions or {}), **(pm.get("partitions") or {})},
+        meta["partition_by"], specs=specs, file_spec=file_spec)
+    dv_rows = meta.pop("dv_rows")
     payload = {"version": version, "parent": parent, "op": op,
-               "files": files, "schema": schema, "stats": stats,
-               "ts": _commit_ts()}
-    if partition_by:
-        payload["partition_by"] = partition_by
-    if out_parts or partition_by:
+               "files": files, "schema": meta.pop("schema"),
+               "stats": stats, "ts": _commit_ts()}
+    if out_parts or meta["partition_by"]:
         payload["partitions"] = out_parts
-    if specs is not None:
-        payload["specs"] = specs
-        payload["default_spec"] = default_spec
+    if file_spec is not None:
         payload["file_spec"] = file_spec
-    if mapping:
-        payload["mapping"] = mapping
-    if dropped_physical:
-        payload["dropped_physical"] = dropped_physical
-    if constraints:
-        payload["constraints"] = constraints
-    if generated:
-        payload["generated"] = generated
-    if defaults:
-        payload["defaults"] = defaults
-    if identity:
-        payload["identity"] = identity
-    if sort_order:
-        payload["sort_order"] = sort_order
-    if ndv_sketch:
-        payload["ndv_sketch"] = ndv_sketch
-    if bloom_index:
-        payload["bloom_index"] = bloom_index
-    if parent_txns:
-        # carry the txn-dedup map through NON-txn commits too, so the
-        # latest manifest stays authoritative across interleaved
-        # appends/merges and across snapshot expiry
-        payload["txns"] = parent_txns
-    if dvs is None and parent:
-        # deletion vectors carry through commits that do not purge or
-        # extend them (appends) — pm was read above when parent > 0
-        dvs = pm.get("dvs") or []
-        dv_rows = pm.get("dv_rows") or 0
-    if dvs:
-        payload["dvs"] = dvs
-        payload["dv_rows"] = dv_rows or 0
-    payload = json.dumps(payload, indent=1)
+    payload.update((k, v) for k, v in meta.items() if v)
+    if meta["dvs"]:
+        payload["dv_rows"] = dv_rows or 0  # dv_rows lives with its dvs
+    payload.update((k, named[k]) for k in _TAGS if named.get(k))
     os.makedirs(_manifest_dir(path), exist_ok=True)
     try:
-        fd = os.open(
-            _manifest_path(path, version),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-        )
+        fd = os.open(_manifest_path(path, version),
+                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError as exc:
         raise CommitConflict(
-            f"version {version} already committed at {path}"
-        ) from exc
+            f"version {version} already committed at {path}") from exc
     with os.fdopen(fd, "w") as f:
-        f.write(payload)
+        f.write(json.dumps(payload, indent=1))
 
 
 def _stamp_identity(df: DataFrame, identity: dict):
@@ -912,10 +870,7 @@ def create_table(spark: SparkSession, path: str, df: DataFrame,
                 f"partition source columns not in frame: {missing}")
     os.makedirs(path, exist_ok=True)
     files, parts = _write_files_any(df, path, partition_by)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-    )
-    _commit(path, 1, files, parent=0, op="create", schema=schema,
+    _commit(path, 1, files, parent=0, op="create", schema=_schema_ddl(df),
             partition_by=partition_by, partitions=parts,
             generated=generated, identity=ident_state)
     return 1
@@ -966,31 +921,68 @@ def read(spark: SparkSession, path: str, version: int | None = None
     return _load_files_dv(spark, path, m, m["files"])
 
 
-def append(spark: SparkSession, path: str, df: DataFrame,
-           retries: int = 3) -> int:
+def _schema_ddl(df: DataFrame) -> str:
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
+
+
+def append(spark: SparkSession, path: str, df: DataFrame) -> int:
     """Append-only commit: parent files carry over by reference.  On a
     nonexistent table (parent 0) the append CREATES it — the v1 commit
     still goes through the same O_EXCL gate, so an append racing a
     create has exactly one winner and the loser retries as a normal
     append against the winner's manifest.  On a partitioned table the
     new rows split through the same hive-layout writer as create."""
+    return _append(spark, path, df)
+
+
+def _append(spark: SparkSession, path: str, df: DataFrame,
+            evolve: bool = False, txn_id: str | None = None) -> int:
+    """The one append body behind :func:`append`,
+    :func:`append_evolve` and :func:`append_idempotent`: identity
+    stamping, generated columns and CHECK constraints
+    (:func:`_prepare_batch`), ONE data write, then a plan that adds the
+    files to whatever snapshot is latest at commit time.  ``evolve``
+    merges the batch's schema into the table's; ``txn_id`` tags the
+    commit for exactly-once delivery."""
     os.makedirs(path, exist_ok=True)
-    parent0 = latest_version(path)
-    pm0 = _read_manifest(path, parent0) if parent0 else {}
-    ident = pm0.get("identity")
+    v0 = latest_version(path)
+    m0 = _read_manifest(path, v0) if v0 else {}
+    if txn_id is not None:
+        seen = _known_txns(path, v0)
+        if txn_id in seen:
+            return seen[txn_id]  # re-delivery: nothing to write
+    mapping = m0.get("mapping")
+    new_mapping = False
+    if evolve and v0:
+        mapping = _fresh_physical(m0, df.columns)
+        new_mapping = mapping != (m0.get("mapping") or {})
+    ident = m0.get("identity")
     ident_state = None
     if ident:
         df, ident_state = _stamp_identity(df, ident)
-    df = _prepare_batch(df, pm0, "append")
-    files, parts = _write_files_any(df, path, pm0.get("partition_by"),
-                                    mapping=pm0.get("mapping"))
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-    )
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent) if parent else {}
-        parent_files = pm.get("files") or []
+    df = _prepare_batch(df, m0, "append")
+    files, parts = _write_files_any(df, path, m0.get("partition_by"),
+                                    mapping=mapping)
+
+    def plan(parent: int, pm: dict):
+        nonlocal df, ident, ident_state, files, parts
+        child: dict = {"partitions": parts}
+        if txn_id is not None:
+            seen = _known_txns(path, parent)
+            if txn_id in seen:
+                # our txn won the race through another deliverer:
+                # reclaim the files we wrote — nothing references them
+                # and expire_snapshots only deletes files that expired
+                # manifests reference, so nothing else ever would
+                for f in files:
+                    try:
+                        os.unlink(os.path.join(path, f))
+                    except FileNotFoundError:
+                        pass
+                _cleanup_empty_dir(path, files)
+                return seen[txn_id]
+            child.update(txn=txn_id, txns={**seen, txn_id: parent + 1})
         if ident:
             # identity is the one append state file-set comparison
             # cannot see: a racer that stamped from the same
@@ -1004,16 +996,18 @@ def append(spark: SparkSession, path: str, df: DataFrame,
                 df, ident_state = _stamp_identity(
                     df.drop(*ident_state.keys()), ident)
                 files, parts = _write_files_any(
-                    df, path, pm0.get("partition_by"),
-                    mapping=pm0.get("mapping"))
-        try:
-            _commit(path, parent + 1, parent_files + files, parent,
-                    "append", schema=schema if not parent else None,
-                    partitions=parts, identity=ident_state)
-            return parent + 1
-        except CommitConflict:
-            continue  # blind append composes with anything: retry
-    raise CommitConflict(f"append to {path} lost {retries + 1} races")
+                    df, path, m0.get("partition_by"), mapping=mapping)
+                child["partitions"] = parts
+            child["identity"] = ident_state
+        if not parent:
+            child["schema"] = _schema_ddl(df)
+        elif evolve:
+            child["schema"] = _merge_schema(pm["schema"], df)
+            if new_mapping:
+                child["mapping"] = mapping
+        return {"files": pm.get("files", []) + files, **child}
+
+    return _commit_loop(path, "append", plan, create=True)
 
 
 def _key_list(key) -> list[str]:
@@ -1136,7 +1130,7 @@ def merge_upsert(
         merged, path, pby, mapping=manifest.get("mapping"))
     _ = kept  # the rebase recomputes kept against the commit-time latest
     return _rebase_commit(path, sorted(touched), new_files, "merge",
-                          expect_dvs=[], new_partitions=new_parts)
+                          expect_dvs=[], partitions=new_parts)
 
 
 def optimize(
@@ -1196,9 +1190,9 @@ def optimize(
     # (its files carry alongside the compacted set); a concurrent
     # rewrite of any compacted file raises ConcurrentModification
     return _rebase_commit(path, files, new_files, "optimize",
-                          purge_dvs=True,
+                          dvs=[], dv_rows=0,
                           expect_dvs=manifest.get("dvs") or [],
-                          new_partitions=new_parts)
+                          partitions=new_parts)
 
 
 def optimize_binpack(
@@ -1265,7 +1259,8 @@ def optimize_binpack(
     touched, new_files = [], []
     for b in bins:
         df = _load_files(spark, path, m, sorted(b))
-        new_files.extend(_write_files(df.coalesce(1), path))
+        new_files.extend(_write_files(
+            _to_physical(df.coalesce(1), m.get("mapping")), path))
         touched.extend(b)
     return _rebase_commit(path, sorted(touched), sorted(new_files),
                           "optimize-binpack", expect_dvs=[])
@@ -1335,7 +1330,7 @@ def optimize_where(
         df.coalesce(n_target), path, pby,
         mapping=manifest.get("mapping"))
     return _rebase_commit(path, scoped, new_files, "optimize-where",
-                          expect_dvs=[], new_partitions=new_parts)
+                          expect_dvs=[], partitions=new_parts)
 
 
 def _physical(m: dict, column: str) -> str:
@@ -1465,7 +1460,7 @@ def delete_where(
             survivors, path, m.get("partition_by"),
             mapping=m.get("mapping"))
     return _rebase_commit(path, candidates, new_files, "delete",
-                          expect_dvs=[], new_partitions=new_parts)
+                          expect_dvs=[], partitions=new_parts)
 
 
 #: widening promotion lattices (round-14 VERDICT task 4 — the Delta
@@ -1525,8 +1520,23 @@ def _merge_schema(old_ddl: str, df: DataFrame) -> str:
     )
 
 
-def append_evolve(spark: SparkSession, path: str, df: DataFrame,
-                  retries: int = 3) -> int:
+def _fresh_physical(m: dict, cols) -> dict:
+    """``m``'s column mapping extended for new columns ``cols``: a new
+    column whose name is still taken PHYSICALLY (a mapped or dropped
+    column's name, e.g. a re-add after :func:`drop_column`) gets a
+    FRESH physical name, so old files' dead pages are never
+    resurrected."""
+    mapping = dict(m.get("mapping") or {})
+    old_cols = set(_schema_types(m["schema"]))
+    used_physical = set(mapping.values()) | \
+        set(m.get("dropped_physical") or [])
+    for c in cols:
+        if c not in old_cols and c not in mapping and c in used_physical:
+            mapping[c] = f"{c}_{uuid.uuid4().hex[:8]}"
+    return mapping
+
+
+def append_evolve(spark: SparkSession, path: str, df: DataFrame) -> int:
     """Append with additive schema evolution: new columns widen the
     manifest schema; files written before the column existed read
     back NULL for it (parquet-by-name resolution against the manifest
@@ -1538,34 +1548,7 @@ def append_evolve(spark: SparkSession, path: str, df: DataFrame,
     :func:`drop_column`) gets a FRESH physical name via a mapping
     entry, so old files' dead pages are never resurrected — pre-add
     rows correctly read NULL for the re-added column."""
-    v0 = latest_version(path)
-    if v0 == 0:
-        return append(spark, path, df, retries=retries)
-    m0 = _read_manifest(path, v0)
-    pby = m0.get("partition_by")
-    mapping = dict(m0.get("mapping") or {})
-    old_cols = set(_schema_types(m0["schema"]))
-    used_physical = set(mapping.values()) | \
-        set(m0.get("dropped_physical") or [])
-    new_mapping = False
-    for c in df.columns:
-        if c not in old_cols and c not in mapping and c in used_physical:
-            mapping[c] = f"{c}_{uuid.uuid4().hex[:8]}"
-            new_mapping = True
-    df = _prepare_batch(df, m0, "append")
-    files, parts = _write_files_any(df, path, pby, mapping=mapping)
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
-        merged = _merge_schema(pm["schema"], df)
-        try:
-            _commit(path, parent + 1, pm["files"] + files, parent,
-                    "append", schema=merged, partitions=parts,
-                    mapping=mapping if new_mapping else None)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"append to {path} lost {retries + 1} races")
+    return _append(spark, path, df, evolve=True)
 
 
 def expire_snapshots(path: str, keep_from: int) -> dict:
@@ -1640,59 +1623,18 @@ def _cleanup_empty_dir(path: str, rel_files: list[str]) -> None:
 
 
 def append_idempotent(spark: SparkSession, path: str, df: DataFrame,
-                      txn_id: str, retries: int = 3) -> int:
+                      txn_id: str) -> int:
     """Exactly-once append: a commit tagged ``txn_id`` lands at most
     once per table — re-delivery of the same transaction (a retried
     streaming micro-batch, a replayed job) finds the tag in the
-    manifest chain and returns the already-committed version without
-    writing.  This is the Delta ``txnAppId``/``txnVersion`` dedup
-    protocol: the sink's idempotence lives in the TABLE's commit
+    manifest's txn map and returns the already-committed version
+    without writing.  This is the Delta ``txnAppId``/``txnVersion``
+    dedup protocol: the sink's idempotence lives in the TABLE's commit
     metadata, not in fragile sink-side state, so it survives driver
-    restarts and checkpoint loss.
-
-    The chain walk is manifest-count-sized (driver-side JSON reads);
-    at production version counts the real formats index txn tags in
-    the latest snapshot — same semantics, amortized lookup."""
-    os.makedirs(path, exist_ok=True)
-    files: list[str] | None = None
-    parts: dict | None = None
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        seen = _known_txns(path, parent)
-        if txn_id in seen:
-            # already committed: no-op re-delivery.  If WE wrote data
-            # before losing the race to our own txn (another worker
-            # delivering the same batch), reclaim the never-referenced
-            # files now — expire_snapshots only deletes files that
-            # expired manifests reference, so nothing else ever would
-            # (round-11 ADVICE: orphan-file leak).
-            if files is not None:
-                for f in files:
-                    try:
-                        os.unlink(os.path.join(path, f))
-                    except FileNotFoundError:
-                        pass
-                _cleanup_empty_dir(path, files)
-            return seen[txn_id]
-        if files is None:  # write the data at most once across retries
-            pmi = _read_manifest(path, parent) if parent else {}
-            files, parts = _write_files_any(
-                df, path, pmi.get("partition_by"),
-                mapping=pmi.get("mapping"))
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        )
-        parent_files = _read_manifest(path, parent)["files"] if parent else []
-        payload_schema = schema if not parent else None
-        try:
-            _commit_txn(path, parent + 1, parent_files + files, parent,
-                        "append", txn_id, schema=payload_schema,
-                        txns={**seen, txn_id: parent + 1},
-                        partitions=parts)
-            return parent + 1
-        except CommitConflict:
-            continue  # re-check: the race winner may be OUR txn
-    raise CommitConflict(f"append to {path} lost {retries + 1} races")
+    restarts and checkpoint loss.  Otherwise it is exactly
+    :func:`append` (constraints, generated and identity columns,
+    column mapping) plus the txn tag."""
+    return _append(spark, path, df, txn_id=txn_id)
 
 
 def _known_txns(path: str, version: int) -> dict[str, int]:
@@ -1719,49 +1661,6 @@ def _known_txns(path: str, version: int) -> dict[str, int]:
             out[m["txn"]] = v
         v = m.get("parent", 0)
     return out
-
-
-def _commit_txn(path: str, version: int, files: list[str], parent: int,
-                op: str, txn_id: str, schema: str | None = None,
-                txns: dict[str, int] | None = None,
-                partitions: dict | None = None) -> None:
-    """`_commit` plus a transaction tag AND the carried-forward txn
-    map in the manifest payload."""
-    parent_stats: dict = {}
-    parent_partitions: dict = {}
-    partition_by: list[str] | None = None
-    if parent:
-        pm = _read_manifest(path, parent)
-        if schema is None:
-            schema = pm.get("schema")
-        partition_by = pm.get("partition_by")
-        parent_stats = pm.get("stats") or {}
-        parent_partitions = pm.get("partitions") or {}
-    stats, out_parts = _assemble_stats_partitions(
-        path, files, schema, parent_stats, parent_partitions,
-        partition_by, partitions)
-    payload = {"version": version, "parent": parent, "op": op,
-               "files": files, "schema": schema, "stats": stats,
-               "ts": _commit_ts(), "txn": txn_id,
-               "txns": txns if txns is not None else {txn_id: version}}
-    if partition_by:
-        payload["partition_by"] = partition_by
-        payload["partitions"] = out_parts
-    if parent:
-        pm2 = _read_manifest(path, parent)
-        if pm2.get("dvs"):
-            payload["dvs"] = pm2["dvs"]
-            payload["dv_rows"] = pm2.get("dv_rows") or 0
-    payload = json.dumps(payload, indent=1)
-    os.makedirs(_manifest_dir(path), exist_ok=True)
-    try:
-        fd = os.open(_manifest_path(path, version),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise CommitConflict(
-            f"version {version} already committed at {path}") from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(payload)
 
 
 def optimize_zorder(
@@ -1832,9 +1731,9 @@ def optimize_zorder(
     # rebase semantics match optimize(): a concurrent append carries
     # alongside, a concurrent rewrite or DV delete conflicts
     return _rebase_commit(path, manifest["files"], new_files,
-                          "optimize-zorder", purge_dvs=True,
+                          "optimize-zorder", dvs=[], dv_rows=0,
                           expect_dvs=manifest.get("dvs") or [],
-                          new_partitions=new_parts)
+                          partitions=new_parts)
 
 
 def change_data_feed(
@@ -2090,7 +1989,7 @@ def replace_where(
         merged, path, m.get("partition_by"), mapping=m.get("mapping"))
     _ = kept  # the rebase recomputes kept against the commit-time latest
     return _rebase_commit(path, candidates, new_files, "replace_where",
-                          expect_dvs=[], new_partitions=new_parts)
+                          expect_dvs=[], partitions=new_parts)
 
 
 def _has_dvs(m: dict) -> bool:
@@ -2190,8 +2089,8 @@ def delete_where_dv(
     return _rebase_commit(
         path, [], [], "delete-dv",
         expect_dvs=sorted(old_dvs), expect_present=candidates,
-        add_dvs=old_dvs + new_dvs,
-        add_dv_rows=(m.get("dv_rows") or 0) + n_new)
+        dvs=old_dvs + new_dvs,
+        dv_rows=(m.get("dv_rows") or 0) + n_new)
 
 
 def update_where_mor(
@@ -2303,9 +2202,9 @@ def update_where_mor(
     return _rebase_commit(
         path, [], new_files, "update-mor",
         expect_dvs=sorted(old_dvs), expect_present=candidates,
-        add_dvs=old_dvs + new_dvs,
-        add_dv_rows=(m.get("dv_rows") or 0) + n_upd,
-        new_partitions=new_parts)
+        dvs=old_dvs + new_dvs,
+        dv_rows=(m.get("dv_rows") or 0) + n_upd,
+        partitions=new_parts)
 
 
 def replace_partitions(spark: SparkSession, path: str,
@@ -2357,11 +2256,10 @@ def replace_partitions(spark: SparkSession, path: str,
         if tuple(sorted((old_parts.get(f) or {}).items())) in replaced
     ]
     return _rebase_commit(path, touched, new_files, "replace_partitions",
-                          expect_dvs=[], new_partitions=new_parts)
+                          expect_dvs=[], partitions=new_parts)
 
 
-def set_partition_spec(path: str, partition_by: list[str] | None,
-                       retries: int = 3) -> int:
+def set_partition_spec(path: str, partition_by: list[str] | None) -> int:
     """Evolve the table's partition spec at a version boundary
     (Iceberg partition-spec evolution, round-12 VERDICT task 4): a
     METADATA-ONLY commit — zero data files are touched, read, or
@@ -2376,12 +2274,9 @@ def set_partition_spec(path: str, partition_by: list[str] | None,
     ``partition_by`` may be ``None``/``[]`` to evolve a partitioned
     table back to a flat layout.  Returns the committed version (the
     current one if the spec is already in effect)."""
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
-        new_spec = list(partition_by or [])
+    new_spec = list(partition_by or [])
+
+    def plan(parent: int, pm: dict):
         specs = dict(pm.get("specs") or {})
         if not specs:
             # first evolution: the table's entire history so far is
@@ -2402,18 +2297,13 @@ def set_partition_spec(path: str, partition_by: list[str] | None,
         if sid is None:
             sid = str(max(int(s) for s in specs) + 1)
             specs[sid] = new_spec
-        try:
-            # _commit tags carried files with the parent's (possibly
-            # implicit "1") spec and would tag NEW files with `sid` —
-            # a set-spec commit adds none, so the tag map is complete
-            _commit(path, parent + 1, pm["files"], parent, "set-spec",
-                    partition_by=new_spec,
-                    specs=specs, default_spec=sid)
-            return parent + 1
-        except CommitConflict:
-            continue  # version race: re-read the new latest and retry
-    raise CommitConflict(f"set_partition_spec at {path} lost "
-                         f"{retries + 1} races")
+        # _commit tags carried files with the parent's (possibly
+        # implicit "1") spec and would tag NEW files with `sid` — a
+        # set-spec commit adds none, so the tag map is complete
+        return {"partition_by": new_spec, "specs": specs,
+                "default_spec": sid}
+
+    return _commit_loop(path, "set-spec", plan)
 
 
 def _all_spec_sources(m: dict) -> set[str]:
@@ -2427,7 +2317,7 @@ def _all_spec_sources(m: dict) -> set[str]:
     }
 
 
-def rename_column(path: str, old: str, new: str, retries: int = 3) -> int:
+def rename_column(path: str, old: str, new: str) -> int:
     """Rename a column WITHOUT rewriting any data file (column
     mapping, round-12 VERDICT task 5 — the Delta name-mapping /
     Iceberg field-id mechanism): a metadata-only commit updates the
@@ -2440,11 +2330,7 @@ def rename_column(path: str, old: str, new: str, retries: int = 3) -> int:
     :func:`_physical`.  Partition-source columns (any spec in
     history) are refused — their hive dir names cannot be relabeled
     without a rewrite."""
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
+    def plan(_parent: int, pm: dict) -> dict:
         types = _schema_types(pm["schema"])
         if old not in types:
             raise ValueError(f"no such column: {old!r}")
@@ -2471,19 +2357,13 @@ def rename_column(path: str, old: str, new: str, retries: int = 3) -> int:
         ndv = dict(pm.get("ndv_sketch") or {})
         if old in ndv:
             ndv[new] = ndv.pop(old)
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "rename-column", schema=schema, mapping=mapping,
-                    bloom_index=bloom, ndv_sketch=ndv)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"rename_column at {path} lost "
-                         f"{retries + 1} races")
+        return {"schema": schema, "mapping": mapping,
+                "bloom_index": bloom, "ndv_sketch": ndv}
+
+    return _commit_loop(path, "rename-column", plan)
 
 
-def widen_column_type(path: str, col: str, new_type: str,
-                      retries: int = 3) -> int:
+def widen_column_type(path: str, col: str, new_type: str) -> int:
     """ALTER COLUMN TYPE — explicit WIDENING as a metadata-only
     commit (the DDL face of the append/merge-time widening in
     :func:`_merge_schema`): the manifest schema flips to the wider
@@ -2491,11 +2371,7 @@ def widen_column_type(path: str, col: str, new_type: str,
     every generation reads through Spark 4's parquet widening
     conversions.  Non-lattice changes and narrowings are refused —
     narrowing would make every existing file a narrowing read."""
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
+    def plan(_parent: int, pm: dict) -> dict:
         types = _schema_types(pm["schema"])
         if col not in types:
             raise ValueError(f"no such column: {col!r}")
@@ -2505,21 +2381,15 @@ def widen_column_type(path: str, col: str, new_type: str,
                 f"cannot ALTER {col!r} {types[col]} -> {new_type}: only "
                 "lattice widenings (tinyint<smallint<int<bigint, "
                 "float<double) are metadata-only")
-        schema = ", ".join(
+        return {"schema": ", ".join(
             f"{n} {new_type if n == col else t}"
-            for n, t in types.items())
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "widen-column", schema=schema)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"widen_column_type at {path} lost "
-                         f"{retries + 1} races")
+            for n, t in types.items())}
+
+    return _commit_loop(path, "widen-column", plan)
 
 
-def add_column_default(path: str, col: str, type_ddl: str, default,
-                       retries: int = 3) -> int:
+def add_column_default(path: str, col: str, type_ddl: str,
+                       default) -> int:
     """ADD COLUMN ... DEFAULT — the Iceberg v3 INITIAL-DEFAULT
     contract (round 16): a metadata-only commit appends the column
     to the logical schema and records ``default`` with the commit
@@ -2536,13 +2406,9 @@ def add_column_default(path: str, col: str, type_ddl: str, default,
     ``append_evolve``'s fresh-physical-name machinery instead)."""
     if not isinstance(default, (int, float, str, bool)):
         raise ValueError("initial default must be a scalar literal")
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
-        types = _schema_types(pm["schema"])
-        if col in types:
+
+    def plan(parent: int, pm: dict) -> dict:
+        if col in _schema_types(pm["schema"]):
             raise ValueError(f"column already exists: {col!r}")
         if col in (pm.get("dropped_physical") or []):
             raise ValueError(
@@ -2551,19 +2417,13 @@ def add_column_default(path: str, col: str, type_ddl: str, default,
                 "append_evolve")
         defaults = dict(pm.get("defaults") or {})
         defaults[col] = {"value": default, "since": parent + 1}
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "add-column-default",
-                    schema=f"{pm['schema']}, {col} {type_ddl}",
-                    defaults=defaults)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"add_column_default at {path} lost "
-                         f"{retries + 1} races")
+        return {"schema": f"{pm['schema']}, {col} {type_ddl}",
+                "defaults": defaults}
+
+    return _commit_loop(path, "add-column-default", plan)
 
 
-def drop_column(path: str, col: str, retries: int = 3) -> int:
+def drop_column(path: str, col: str) -> int:
     """Drop a column WITHOUT rewriting any data file: a metadata-only
     commit removes the field from the logical schema — the physical
     column stays in the already-written immutable files and is simply
@@ -2572,11 +2432,7 @@ def drop_column(path: str, col: str, retries: int = 3) -> int:
     maps to a FRESH physical name instead of resurrecting the old
     pages' values (:func:`append_evolve`).  Partition-source columns
     are refused, same as rename."""
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
+    def plan(_parent: int, pm: dict) -> dict:
         types = _schema_types(pm["schema"])
         if col not in types:
             raise ValueError(f"no such column: {col!r}")
@@ -2591,27 +2447,23 @@ def drop_column(path: str, col: str, retries: int = 3) -> int:
         dropped = list(pm.get("dropped_physical") or [])
         if phys not in dropped:
             dropped.append(phys)
-        schema = ", ".join(
-            f"{n} {t}" for n, t in types.items() if n != col
-        )
         # invalidate the dropped column's sidecar maps: a later
         # re-add of the same logical name maps to a FRESH physical
         # column, so sidecars built from the old pages would prune
         # falsely (round-13 ADVICE; mirrors dropped_physical)
-        bloom = {c: fm for c, fm in (pm.get("bloom_index") or {}).items()
-                 if c != col}
-        ndv = {c: fm for c, fm in (pm.get("ndv_sketch") or {}).items()
-               if c != col}
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "drop-column", schema=schema, mapping=mapping,
-                    dropped_physical=dropped,
-                    bloom_index=bloom, ndv_sketch=ndv)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"drop_column at {path} lost "
-                         f"{retries + 1} races")
+        return {
+            "schema": ", ".join(
+                f"{n} {t}" for n, t in types.items() if n != col),
+            "mapping": mapping, "dropped_physical": dropped,
+            "bloom_index": {c: fm for c, fm in
+                            (pm.get("bloom_index") or {}).items()
+                            if c != col},
+            "ndv_sketch": {c: fm for c, fm in
+                           (pm.get("ndv_sketch") or {}).items()
+                           if c != col},
+        }
+
+    return _commit_loop(path, "drop-column", plan)
 
 
 def _write_dv_sidecar(positions: DataFrame, path: str,
@@ -2736,13 +2588,7 @@ def merge_three_way(
         if cand != manifest["schema"]:
             merged_schema = cand
             # re-added name after drop_column: fresh physical column
-            mp = dict(manifest.get("mapping") or {})
-            used_physical = set(mp.values()) | \
-                set(manifest.get("dropped_physical") or [])
-            for c in extra_cols:
-                if c not in mp and c in used_physical:
-                    mp[c] = f"{c}_{uuid.uuid4().hex[:8]}"
-            eff_mapping = mp or None
+            eff_mapping = _fresh_physical(manifest, extra_cols) or None
     touched = _matched_data_files(spark, path, parent, manifest, src, key)
     pby = manifest.get("partition_by")
 
@@ -2830,12 +2676,14 @@ def merge_three_way(
         merged = inserts
     new_files, new_parts = _write_files_observed(
         merged, path, pby, mapping=eff_mapping)
+    # expect_dvs=[] pins the parent's DV set empty, so dv_files IS
+    # the child's whole set
+    evolved = ({} if merged_schema is None
+               else {"schema": merged_schema, "mapping": eff_mapping})
     return _rebase_commit(
         path, sorted(touched) + drop_whole, new_files, "merge3",
-        expect_dvs=[], new_partitions=new_parts,
-        add_dvs=dv_files or None, add_dv_rows=n_dv,
-        schema=merged_schema,
-        mapping=eff_mapping if merged_schema is not None else None)
+        expect_dvs=[], partitions=new_parts,
+        dvs=dv_files, dv_rows=n_dv, **evolved)
 
 
 def _commit_ts() -> float:
@@ -2882,45 +2730,6 @@ def read_as_of(spark: SparkSession, path: str, ts: float) -> DataFrame:
     """``SELECT ... TIMESTAMP AS OF ts``: snapshot read of the latest
     version committed at or before the wall-clock timestamp."""
     return read(spark, path, version=version_as_of(path, ts))
-
-
-def tag_version(path: str, name: str, version: int | None = None) -> int:
-    """Tag a committed version with a stable name (Iceberg tags /
-    Delta named snapshots): ``tags/<name>.json`` records the version;
-    readers resolve the tag instead of remembering a number, and
-    VACUUM policy can key retention off tags.  Tags are immutable —
-    re-tagging an existing name raises (create a new name); the tag
-    file is written with the same O_EXCL primitive as manifests."""
-    v = latest_version(path) if version is None else version
-    if not os.path.exists(_manifest_path(path, v)):
-        raise ValueError(f"version {v} not committed at {path}")
-    tdir = os.path.join(path, "tags")
-    os.makedirs(tdir, exist_ok=True)
-    safe = name.replace("/", "_")
-    try:
-        fd = os.open(os.path.join(tdir, f"{safe}.json"),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ValueError(f"tag '{name}' already exists at {path}") from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(json.dumps({"name": name, "version": v}))
-    return v
-
-
-def resolve_tag(path: str, name: str) -> int:
-    """Tag name -> version number; raises on an unknown tag."""
-    safe = name.replace("/", "_")
-    tpath = os.path.join(path, "tags", f"{safe}.json")
-    try:
-        with open(tpath) as f:
-            return int(json.load(f)["version"])
-    except FileNotFoundError as exc:
-        raise ValueError(f"unknown tag '{name}' at {path}") from exc
-
-
-def read_tag(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Snapshot read of a tagged version (``VERSION AS OF <tag>``)."""
-    return read(spark, path, version=resolve_tag(path, name))
 
 
 def prune_files_source(
@@ -3022,46 +2831,19 @@ def shallow_clone(src_path: str, dst_path: str,
         return f if os.path.isabs(f) else os.path.join(src_root, f)
 
     files = [_abs(f) for f in m["files"]]
-    remap = dict(zip(m["files"], files))
     os.makedirs(dst_path, exist_ok=True)
-    payload = {
-        "version": 1, "parent": 0, "op": "clone",
-        "files": files, "schema": m["schema"],
-        "stats": {remap[f]: s for f, s in (m.get("stats") or {}).items()
-                  if f in remap},
-        "ts": _commit_ts(),
-        "clone_of": {"path": src_root, "version": v},
-    }
-    if m.get("partition_by"):
-        payload["partition_by"] = m["partition_by"]
-    if m.get("partitions"):
-        payload["partitions"] = {
-            remap[f]: p for f, p in m["partitions"].items() if f in remap
-        }
-    if m.get("specs") is not None:
-        payload["specs"] = m["specs"]
-        payload["default_spec"] = m.get("default_spec")
-        payload["file_spec"] = {
-            remap[f]: s for f, s in (m.get("file_spec") or {}).items()
-            if f in remap
-        }
-    if m.get("mapping"):
-        payload["mapping"] = m["mapping"]
-    if m.get("dropped_physical"):
-        payload["dropped_physical"] = m["dropped_physical"]
-    if m.get("constraints"):
-        payload["constraints"] = m["constraints"]  # guards clone too
-    if m.get("generated"):
-        payload["generated"] = m["generated"]
-    os.makedirs(_manifest_dir(dst_path), exist_ok=True)
-    try:
-        fd = os.open(_manifest_path(dst_path, 1),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise CommitConflict(
-            f"version 1 already committed at {dst_path}") from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(json.dumps(payload, indent=1))
+
+    def remapped(key: str) -> dict:
+        return {_abs(f): e for f, e in (m.get(key) or {}).items()}
+
+    _commit(dst_path, 1, files, 0, "clone",
+            stats=remapped("stats"), partitions=remapped("partitions"),
+            file_spec=remapped("file_spec"),
+            clone_of={"path": src_root, "version": v},
+            **{k: m.get(k) for k in (
+                "schema", "partition_by", "specs", "default_spec",
+                "mapping", "dropped_physical", "constraints",
+                "generated")})
     return 1
 
 
@@ -3258,7 +3040,7 @@ def _enforce_constraints(df: DataFrame, m: dict | None, op: str) -> None:
 
 
 def add_check_constraint(spark: SparkSession, path: str, name: str,
-                         predicate: str, retries: int = 3) -> int:
+                         predicate: str) -> int:
     """ALTER TABLE ... ADD CONSTRAINT <name> CHECK (<predicate>) —
     Delta's table-constraint mechanics: the EXISTING rows are
     validated first (one full read, the same cost Delta pays), then
@@ -3284,66 +3066,30 @@ def add_check_constraint(spark: SparkSession, path: str, name: str,
             f"existing rows violate CHECK ({predicate}) — constraint "
             f"'{name}' not added"
         )
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
+    def plan(_parent: int, pm: dict) -> dict:
         cons = dict(pm.get("constraints") or {})
         if name in cons:
             raise ValueError(f"constraint '{name}' already exists at {path}")
-        cons[name] = predicate
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "add_constraint", constraints=cons)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"add_constraint at {path} lost {retries + 1} races")
+        return {"constraints": {**cons, name: predicate}}
+
+    return _commit_loop(path, "add_constraint", plan)
 
 
-def drop_constraint(path: str, name: str, retries: int = 3) -> int:
+def drop_constraint(path: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT — metadata-only commit."""
-    v0 = latest_version(path)
-    if v0 == 0:
-        raise ValueError(f"table does not exist: {path}")
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
+    def plan(_parent: int, pm: dict) -> dict:
         cons = dict(pm.get("constraints") or {})
         if name not in cons:
             raise ValueError(f"unknown constraint '{name}' at {path}")
         del cons[name]
-        try:
-            # an explicit {} clears the carry (None would inherit)
-            _commit(path, parent + 1, pm["files"], parent,
-                    "drop_constraint", constraints=cons)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"drop_constraint at {path} lost {retries + 1} races")
+        return {"constraints": cons}  # a named {} clears the carry
+
+    return _commit_loop(path, "drop_constraint", plan)
 
 
 # --------------------------------------------------------------------
 # RESTORE (Delta RESTORE TABLE ... TO VERSION/TIMESTAMP AS OF)
 # --------------------------------------------------------------------
-
-def _write_manifest_payload(path: str, payload: dict) -> None:
-    """O_EXCL manifest publish of a pre-assembled payload — the same
-    one-winner gate as :func:`_commit`, for commits (restore, clone)
-    whose metadata is copied from another snapshot rather than
-    derived from the parent."""
-    os.makedirs(_manifest_dir(path), exist_ok=True)
-    try:
-        fd = os.open(_manifest_path(path, payload["version"]),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise CommitConflict(
-            f"version {payload['version']} already committed at {path}"
-        ) from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(json.dumps(payload, indent=1))
-
 
 def _validate_restore_constraints(spark: SparkSession, path: str,
                                   tm: dict, cons: dict) -> None:
@@ -3372,7 +3118,7 @@ def _validate_restore_constraints(spark: SparkSession, path: str,
 
 
 def restore_table(path: str, version: int | None = None,
-                  tag: str | None = None, retries: int = 3,
+                  tag: str | None = None,
                   spark: SparkSession | None = None) -> int:
     """RESTORE TABLE ... TO VERSION AS OF <v> / tag (Delta RESTORE):
     commit a NEW version whose snapshot state — file list, schema,
@@ -3401,7 +3147,7 @@ def restore_table(path: str, version: int | None = None,
     resurrect an already-applied streaming epoch."""
     if (version is None) == (tag is None):
         raise ValueError("pass exactly one of version= / tag=")
-    v = resolve_tag(path, tag) if tag is not None else int(version)
+    v = _tagged_version(path, tag) if tag is not None else int(version)
     if latest_version(path) == 0:
         raise ValueError(f"table does not exist: {path}")
     if not os.path.exists(_manifest_path(path, v)):
@@ -3417,12 +3163,14 @@ def restore_table(path: str, version: int | None = None,
         raise ValueError(
             f"cannot restore {path} to v{v}: {len(missing)} data "
             f"file(s) were vacuumed (e.g. {sorted(missing)[:2]})")
-    drop = {"version", "parent", "op", "ts", "txns", "constraints",
-            "restore_of"}
+    # every carried key comes from the target except the two that
+    # stay current: constraints and the txn map
+    copied = {k: tm.get(k) for k in _CARRIED
+              if k not in ("constraints", "txns")}
     validated: dict | None = None
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
+
+    def plan(_parent: int, pm: dict) -> dict:
+        nonlocal validated
         kept_cons = pm.get("constraints") or {}
         if kept_cons and kept_cons != validated:
             if spark is None:
@@ -3431,19 +3179,12 @@ def restore_table(path: str, version: int | None = None,
                     "spark= to revalidate the restored snapshot")
             _validate_restore_constraints(spark, path, tm, kept_cons)
             validated = dict(kept_cons)
-        payload = {k: val for k, val in tm.items() if k not in drop}
-        payload.update(version=parent + 1, parent=parent, op="restore",
-                       ts=_commit_ts(), restore_of=v)
-        if pm.get("txns"):
-            payload["txns"] = pm["txns"]
-        if pm.get("constraints"):
-            payload["constraints"] = pm["constraints"]
-        try:
-            _write_manifest_payload(path, payload)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"restore at {path} lost {retries + 1} races")
+        return {"files": list(tm["files"]), "stats": tm.get("stats"),
+                "partitions": tm.get("partitions"),
+                "file_spec": tm.get("file_spec"), "restore_of": v,
+                **copied}
+
+    return _commit_loop(path, "restore", plan)
 
 
 # --------------------------------------------------------------------
@@ -3534,8 +3275,7 @@ def metadata_table(spark: SparkSession, path: str, kind: str,
 # Write-Audit-Publish (Iceberg WAP / Delta staged commits)
 # --------------------------------------------------------------------
 
-def publish(spark: SparkSession, staging_path: str, main_path: str,
-            retries: int = 3) -> int:
+def publish(spark: SparkSession, staging_path: str, main_path: str) -> int:
     """WRITE-AUDIT-PUBLISH: fast-forward MAIN by the changes staged on
     a :func:`shallow_clone` of it — the Iceberg WAP / audit-branch
     pattern.  The flow is::
@@ -3624,30 +3364,32 @@ def publish(spark: SparkSession, staging_path: str, main_path: str,
         moved.append(dst_rel)
         if rel in sparts:
             moved_parts[dst_rel] = sparts[rel]
+    evolved: dict = {}
+    if schema is not None:
+        evolved = dict(
+            schema=schema,
+            # staged evolution: main's schema must still be the clone
+            # point's at COMMIT time, not just at the pre-check above —
+            # a metadata-only evolution landing in between is a
+            # conflict, not a silent overwrite
+            expect_schema=base_m["schema"],
+            # a staged evolution carries its column MAPPING too — a
+            # rename staged on the branch, or a merge evolve_schema
+            # that assigned a fresh physical name for a re-added
+            # dropped column, must publish the mapping alongside the
+            # schema or the affected column silently reads NULL from
+            # the published files; guarded against concurrent
+            # re-keying the same way the schema is
+            mapping=sm.get("mapping"),
+            expect_mapping=base_m.get("mapping"),
+            # same rule for the dropped-physical ledger: a column
+            # DROPPED on the staging must keep its physical name
+            # retired on main, or a later re-add would resurrect the
+            # old pages' values
+            dropped_physical=sm.get("dropped_physical"))
     return _rebase_commit(
         main_path, sorted(dropped), sorted(moved), "wap_publish",
-        retries=retries, expect_dvs=[],
-        new_partitions=moved_parts or None, schema=schema,
-        # staged evolution: main's schema must still be the clone
-        # point's at COMMIT time, not just at the pre-check above —
-        # a metadata-only evolution landing in between is a conflict,
-        # not a silent overwrite (round-13 ADVICE)
-        expect_schema=base_m["schema"] if schema is not None else None,
-        # a staged evolution carries its column MAPPING too — a
-        # rename staged on the branch, or a merge evolve_schema that
-        # assigned a fresh physical name for a re-added dropped
-        # column, must publish the mapping alongside the schema or
-        # the affected column silently reads NULL from the published
-        # files; guarded against concurrent re-keying the same way
-        # the schema is (round-14 ADVICE)
-        mapping=sm.get("mapping") if schema is not None else None,
-        expect_mapping=(base_m.get("mapping")
-                        if schema is not None else _UNSET),
-        # same rule for the dropped-physical ledger: a column DROPPED
-        # on the staging must keep its physical name retired on main,
-        # or a later re-add would resurrect the old pages' values
-        dropped_physical=(sm.get("dropped_physical")
-                          if schema is not None else None))
+        expect_dvs=[], partitions=moved_parts, **evolved)
 
 
 # --------------------------------------------------------------------
@@ -3759,7 +3501,7 @@ def read_branch(spark: SparkSession, path: str, name: str,
 
 
 def publish_branch(spark: SparkSession, path: str, name: str,
-                   retries: int = 3, retain: bool = False) -> int:
+                   retain: bool = False) -> int:
     """FAST-FORWARD PUBLISH a branch to main — Iceberg's
     ``fast_forward('main', '<branch>')`` with Delta-WAP squash
     semantics: the branch's net effect since its fork point lands on
@@ -3782,7 +3524,7 @@ def publish_branch(spark: SparkSession, path: str, name: str,
     bp = branch_path(path, name)
     if latest_version(bp) == 0:
         raise ValueError(f"unknown branch '{name}' at {path}")
-    v = publish(spark, bp, path, retries=retries)
+    v = publish(spark, bp, path)
     drop_branch(path, name)
     if retain:
         create_branch(path, name, version=v)
@@ -3818,11 +3560,16 @@ def create_tag(path: str, name: str, version: int | None = None) -> int:
     if not _BRANCH_NAME_RE.match(name):
         raise ValueError(f"invalid tag name: {name!r}")
     v = latest_version(path) if version is None else version
-    _read_manifest(path, v)  # must exist (raises otherwise)
+    if not os.path.exists(_manifest_path(path, v)):
+        raise ValueError(f"version {v} not committed at {path}")
     os.makedirs(_tag_dir(path), exist_ok=True)
     ref = os.path.join(_tag_dir(path), f"{name}.json")
-    with open(ref, "x") as f:   # O_EXCL: one winner, tags are immutable
-        json.dump({"version": v}, f)
+    try:
+        with open(ref, "x") as f:  # O_EXCL: one winner, tags immutable
+            json.dump({"version": v}, f)
+    except FileExistsError as exc:
+        raise FileExistsError(
+            f"tag '{name}' already exists at {path}") from exc
     return v
 
 
@@ -3839,20 +3586,22 @@ def list_tags(path: str) -> dict[str, int]:
     return out
 
 
-def read_tag(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Snapshot read of a tag — ``SELECT ... VERSION AS OF tag``."""
+def _tagged_version(path: str, name: str) -> int:
     tags = list_tags(path)
     if name not in tags:
         raise ValueError(f"unknown tag '{name}' at {path}")
-    return read(spark, path, version=tags[name])
+    return tags[name]
+
+
+def read_tag(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """Snapshot read of a tag — ``SELECT ... VERSION AS OF tag``."""
+    return read(spark, path, version=_tagged_version(path, name))
 
 
 def drop_tag(path: str, name: str) -> None:
     """DROP TAG: the snapshot loses its retention pin and expires
     with normal :func:`expire_snapshots` policy afterwards."""
-    tags = list_tags(path)
-    if name not in tags:
-        raise ValueError(f"unknown tag '{name}' at {path}")
+    _tagged_version(path, name)
     os.unlink(os.path.join(_tag_dir(path), f"{name}.json"))
 
 
@@ -3953,7 +3702,7 @@ def _bloom_hashes(v, m: int, k: int) -> list[int]:
 
 
 def build_bloom_index(spark: SparkSession, path: str, column: str,
-                      fpp: float = 0.01, retries: int = 3) -> int:
+                      fpp: float = 0.01) -> int:
     """CREATE BLOOMFILTER INDEX on ``column``: one column-pruned
     distributed pass over the live files that lack a sidecar, folding
     per-Arrow-batch partial bitmaps keyed by file; the driver ORs the
@@ -4043,19 +3792,8 @@ def build_bloom_index(spark: SparkSession, path: str, column: str,
                 new_map[rel] = name
     else:
         new_map = dict(existing)
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
-        idx = dict(pm.get("bloom_index") or {})
-        idx[column] = {f: s for f, s in new_map.items()
-                       if f in set(pm["files"])}
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "bloom_index", bloom_index=idx)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"bloom_index at {path} lost {retries + 1} races")
+    return _commit_loop(path, "bloom_index", lambda _v, pm: {
+        "bloom_index": {**(pm.get("bloom_index") or {}), column: new_map}})
 
 
 def prune_files_bloom(spark_or_none, path: str, column: str, value,
@@ -4109,7 +3847,7 @@ def read_bloom_pruned(spark: SparkSession, path: str, column: str,
 # Sort order (Iceberg SORT ORDER / Delta OPTIMIZE ... ZORDER's 1-D kin)
 # --------------------------------------------------------------------
 
-def set_sort_order(path: str, columns: list[str], retries: int = 3) -> int:
+def set_sort_order(path: str, columns: list[str]) -> int:
     """ALTER TABLE ... WRITE ORDERED BY (Iceberg sort-order spec):
     declare the table's clustering columns as a METADATA-ONLY commit.
     The declaration is advisory until :func:`optimize_sorted`
@@ -4123,16 +3861,8 @@ def set_sort_order(path: str, columns: list[str], retries: int = 3) -> int:
     missing = [c for c in columns if c not in known]
     if missing:
         raise ValueError(f"unknown sort columns: {missing}")
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "set_sort_order", sort_order=list(columns))
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"set_sort_order at {path} lost races")
+    return _commit_loop(path, "set_sort_order",
+                        lambda _v, _pm: {"sort_order": list(columns)})
 
 
 def optimize_sorted(spark: SparkSession, path: str,
@@ -4160,9 +3890,9 @@ def optimize_sorted(spark: SparkSession, path: str,
     new_files, parts = _write_files_any(
         out, path, m.get("partition_by"), mapping=m.get("mapping"))
     return _rebase_commit(path, list(m["files"]), new_files,
-                          "optimize_sort", purge_dvs=True,
+                          "optimize_sort", dvs=[], dv_rows=0,
                           expect_dvs=m.get("dvs") or [],
-                          new_partitions=parts)
+                          partitions=parts)
 
 
 # --------------------------------------------------------------------
@@ -4170,7 +3900,7 @@ def optimize_sorted(spark: SparkSession, path: str,
 # --------------------------------------------------------------------
 
 def write_ndv_sketches(spark: SparkSession, path: str, column: str,
-                       lg_k: int = 12, retries: int = 3) -> int:
+                       lg_k: int = 12) -> int:
     """ANALYZE-equivalent: attach a mergeable HLL sketch of
     ``column`` to every live data file lacking one — the Iceberg
     puffin-sidecar design (theta/HLL sketches next to the data,
@@ -4209,19 +3939,8 @@ def write_ndv_sketches(spark: SparkSession, path: str, column: str,
         for f in todo:
             if f not in done:
                 new_map[f] = ""  # all-NULL / empty file: NDV 0
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
-        idx = dict(pm.get("ndv_sketch") or {})
-        idx[column] = {f: s for f, s in new_map.items()
-                       if f in set(pm["files"])}
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "analyze_ndv", ndv_sketch=idx)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"write_ndv_sketches at {path} lost races")
+    return _commit_loop(path, "analyze_ndv", lambda _v, pm: {
+        "ndv_sketch": {**(pm.get("ndv_sketch") or {}), column: new_map}})
 
 
 def table_ndv(spark: SparkSession, path: str, column: str,
@@ -4317,7 +4036,7 @@ def optimize_sorted_incremental(spark: SparkSession, path: str
     new_files, parts = _write_files_any(
         out, path, m.get("partition_by"), mapping=m.get("mapping"))
     v = _rebase_commit(path, sorted(rewrite), new_files,
-                       "recluster", expect_dvs=[], new_partitions=parts)
+                       "recluster", expect_dvs=[], partitions=parts)
     return v, len(rewrite), len(m["files"])
 
 

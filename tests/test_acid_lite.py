@@ -645,21 +645,22 @@ def test_append_idempotent_reclaims_orphans(spark, tdir, monkeypatch):
     committed by a concurrent deliverer, must reclaim the
     never-referenced files (round-11 ADVICE: nothing else ever would)."""
     acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]))
-    orig_commit = acid_lite._commit_txn
+    orig_commit = acid_lite._commit
     state = {"raced": False}
 
-    def racing_commit(path, version, files, parent, op, txn_id, **kw):
-        if not state["raced"]:
+    def racing_commit(path, version, files, parent, op, **kw):
+        if kw.get("txn") == "batch-7" and not state["raced"]:
             state["raced"] = True
             # the concurrent deliverer lands the SAME txn first
             acid_lite.append_idempotent(
                 spark, tdir, _df(spark, [(2, "b")]), txn_id="batch-7")
             raise acid_lite.CommitConflict("simulated version race")
-        return orig_commit(path, version, files, parent, op, txn_id, **kw)
+        return orig_commit(path, version, files, parent, op, **kw)
 
-    monkeypatch.setattr(acid_lite, "_commit_txn", racing_commit)
+    monkeypatch.setattr(acid_lite, "_commit", racing_commit)
     v = acid_lite.append_idempotent(
         spark, tdir, _df(spark, [(2, "b")]), txn_id="batch-7")
+    assert state["raced"]
     m = acid_lite._read_manifest(tdir, acid_lite.latest_version(tdir))
     assert v == acid_lite.latest_version(tdir)
     # every parquet on disk is referenced by SOME manifest — no orphans
@@ -903,17 +904,18 @@ def test_timestamp_as_of_and_tags(spark, tdir):
     with pytest.raises(ValueError, match="no retained version"):
         acid_lite.version_as_of(tdir, t1 - 3600)
     # tags: name a version, read through it, immutability enforced
-    acid_lite.tag_version(tdir, "audit-2024Q1", version=2)
-    assert acid_lite.resolve_tag(tdir, "audit-2024Q1") == 2
+    acid_lite.create_tag(tdir, "audit-2024Q1", version=2)
+    assert acid_lite.list_tags(tdir)["audit-2024Q1"] == 2
     assert {r.k for r in
             acid_lite.read_tag(spark, tdir, "audit-2024Q1").collect()} \
         == {1, 2}
-    with pytest.raises(ValueError, match="already exists"):
-        acid_lite.tag_version(tdir, "audit-2024Q1", version=3)
+    with pytest.raises(FileExistsError, match="already exists"):
+        acid_lite.create_tag(tdir, "audit-2024Q1", version=3)
+    assert acid_lite.list_tags(tdir)["audit-2024Q1"] == 2
     with pytest.raises(ValueError, match="unknown tag"):
-        acid_lite.resolve_tag(tdir, "nope")
+        acid_lite.read_tag(spark, tdir, "nope")
     with pytest.raises(ValueError, match="not committed"):
-        acid_lite.tag_version(tdir, "future", version=99)
+        acid_lite.create_tag(tdir, "future", version=99)
 
 
 def test_partition_transforms_hidden_bucket_truncate_month(spark, tdir):
@@ -1519,7 +1521,7 @@ def test_restore_metadata_only_history_preserving(spark, tdir):
     ops = [h["op"] for h in acid_lite.describe_history(tdir)]
     assert ops[0] == "restore" and "merge" in ops
     # restore-to-tag resolves the same way
-    acid_lite.tag_version(tdir, "good", 1)
+    acid_lite.create_tag(tdir, "good", 1)
     rv2 = acid_lite.restore_table(tdir, tag="good", spark=spark)
     assert acid_lite._read_manifest(tdir, rv2)["restore_of"] == 1
     with pytest.raises(ValueError):
@@ -2800,3 +2802,163 @@ def test_identity_restamps_when_losing_append_race(spark, tdir,
     rows = {r.k: r.sid for r in acid_lite.read(spark, tdir).collect()}
     assert len(set(rows.values())) == 3, rows       # no collision
     assert rows[3] > rows[2] > rows[1]
+
+
+# --- one commit path: carry-forward, one tag store, structure guard ---
+
+
+def _ka(spark, rows):
+    return spark.createDataFrame(rows, "k bigint, a bigint").coalesce(1)
+
+
+def _carry_table(spark, tdir) -> dict:
+    """A table whose manifest carries every metadata key a commit must
+    keep: a column mapping (a renamed to b), a CHECK constraint, a sort
+    order, a generated column and a txn map.  Every row has b = 10 * k
+    and k2 = 2 * k.  Returns the latest manifest."""
+    acid_lite.create_table(spark, tdir, _ka(spark, [(1, 10)]),
+                           generated={"k2": "k * 2"})
+    acid_lite.append_idempotent(spark, tdir, _ka(spark, [(2, 20)]),
+                                txn_id="t-1")
+    acid_lite.rename_column(tdir, "a", "b")
+    acid_lite.add_check_constraint(spark, tdir, "b_pos", "b > 0")
+    acid_lite.set_sort_order(tdir, ["k"])
+    return acid_lite._read_manifest(tdir, acid_lite.latest_version(tdir))
+
+
+def _kb(spark, rows):
+    return spark.createDataFrame(rows, "k bigint, b bigint").coalesce(1)
+
+
+def _restore_to_setup(spark, tdir):
+    v = acid_lite.latest_version(tdir)
+    acid_lite.append(spark, tdir, _kb(spark, [(3, 30)]))
+    return acid_lite.restore_table(tdir, version=v, spark=spark)
+
+
+_CARRY_COMMITS = {
+    "append": lambda spark, t: acid_lite.append(
+        spark, t, _kb(spark, [(3, 30)])),
+    "append_evolve": lambda spark, t: acid_lite.append_evolve(
+        spark, t, spark.createDataFrame(
+            [(3, 30, "x")], "k bigint, b bigint, c string")),
+    "append_idempotent": lambda spark, t: acid_lite.append_idempotent(
+        spark, t, _kb(spark, [(3, 30)]), txn_id="t-2"),
+    "merge_upsert": lambda spark, t: acid_lite.merge_upsert(
+        spark, t, _kb(spark, [(2, 20), (3, 30)]), key="k"),
+    "delete_where": lambda spark, t: acid_lite.delete_where(
+        spark, t, "k", lo=1, hi=1),
+    "optimize_binpack": lambda spark, t: acid_lite.optimize_binpack(
+        spark, t),
+    "restore_table": _restore_to_setup,
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_CARRY_COMMITS))
+def test_every_commit_kind_carries_table_metadata(spark, tdir, kind):
+    """No commit kind may shed table metadata: after each kind, the
+    latest manifest keeps the column mapping, CHECK constraint, sort
+    order, generated column and txn map, and the renamed column reads
+    back its real values (a lost mapping reads NULL for every row)."""
+    setup = _carry_table(spark, tdir)
+    v = _CARRY_COMMITS[kind](spark, tdir)
+    assert v == acid_lite.latest_version(tdir) > setup["version"]
+    m = acid_lite._read_manifest(tdir, v)
+    for key in ("mapping", "constraints", "sort_order", "generated"):
+        assert m.get(key) == setup[key], key
+    assert setup["txns"].items() <= (m.get("txns") or {}).items()
+    rows = acid_lite.read(spark, tdir).collect()
+    assert rows
+    assert all(r.b == 10 * r.k and r.k2 == 2 * r.k for r in rows), rows
+
+
+def test_append_idempotent_enforces_table_contract(spark, tdir):
+    """append_idempotent is append plus a txn tag: it rejects a batch
+    that violates a CHECK constraint (nothing committed, txn not
+    recorded), and a valid batch on a renamed column keeps the
+    mapping, so every row reads back its real value."""
+    acid_lite.create_table(spark, tdir, _ka(spark, [(1, 10), (2, 20)]))
+    acid_lite.rename_column(tdir, "a", "b")
+    acid_lite.add_check_constraint(spark, tdir, "b_pos", "b > 0")
+    v = acid_lite.latest_version(tdir)
+    with pytest.raises(acid_lite.ConstraintViolation):
+        acid_lite.append_idempotent(
+            spark, tdir, _kb(spark, [(3, -30)]), txn_id="bad")
+    assert acid_lite.latest_version(tdir) == v
+    acid_lite.append_idempotent(
+        spark, tdir, _kb(spark, [(3, 30)]), txn_id="good")
+    m = acid_lite._read_manifest(tdir, acid_lite.latest_version(tdir))
+    assert m["mapping"] == {"b": "a"}
+    assert m["constraints"] == {"b_pos": "b > 0"}
+    assert set(m["txns"]) == {"good"}
+    assert sorted((r.k, r.b) for r in acid_lite.read(spark, tdir).collect()) \
+        == [(1, 10), (2, 20), (3, 30)]
+
+
+@pytest.mark.parametrize(
+    "name", ["audit 2024", "q3/2024", "release-1.0", ".hidden", "t" * 80])
+def test_tag_never_silently_dropped(spark, tdir, name):
+    """Names the old free-form tag writer accepted: create_tag either
+    rejects the name up front, or the tag is listed, readable and pins
+    its snapshot through expire_snapshots — never written but
+    invisible to list_tags."""
+    acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]))
+    acid_lite.append(spark, tdir, _df(spark, [(2, "b")]))
+    try:
+        acid_lite.create_tag(tdir, name, version=1)
+    except ValueError as exc:
+        assert "invalid tag name" in str(exc)
+        assert acid_lite.list_tags(tdir) == {}
+        tag_dir = os.path.join(tdir, "tags")
+        assert not os.path.isdir(tag_dir) or not os.listdir(tag_dir)
+        return
+    assert acid_lite.list_tags(tdir) == {name: 1}
+    acid_lite.expire_snapshots(tdir, keep_from=2)
+    assert {r.k for r in acid_lite.read_tag(spark, tdir, name).collect()} \
+        == {1}
+
+
+def test_acid_lite_has_one_commit_path():
+    """Structure guard: acid_lite publishes manifests from ONE place
+    and retries version races in ONE loop, with no per-call retries
+    knob.  Exclusive-create sites are allowed only in the manifest
+    publisher (_commit) and the tag-ref writer (create_tag)."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(acid_lite))
+
+    def excl_sites(fn):
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.Call):
+                continue
+            src = ast.unparse(node)
+            if ast.unparse(node.func) == "os.open" and "O_EXCL" in src:
+                yield node
+            elif ast.unparse(node.func) == "open" and any(
+                    isinstance(a, ast.Constant) and a.value == "x"
+                    for a in node.args[1:] + [k.value for k in node.keywords]):
+                yield node
+
+    funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+    sites = {f.name: len(list(excl_sites(f))) for f in funcs}
+    sites = {name: n for name, n in sites.items() if n}
+    assert sites == {"_commit": 1, "create_tag": 1}, sites
+    retry_loops = [
+        n for n in ast.walk(tree) if isinstance(n, ast.For)
+        and "retries" in ast.unparse(n.iter).lower()]
+    assert len(retry_loops) == 1, [ast.unparse(n.iter) for n in retry_loops]
+    handlers = [
+        n for n in ast.walk(tree) if isinstance(n, ast.ExceptHandler)
+        and n.type is not None and "CommitConflict" in ast.unparse(n.type)]
+    assert len(handlers) == 1
+    knobs = [
+        f.name for f in tree.body if isinstance(f, ast.FunctionDef)
+        and not f.name.startswith("_")
+        and any(a.arg == "retries"
+                for a in f.args.args + f.args.kwonlyargs)]
+    assert knobs == []
+    for gone in ("_commit_txn", "_write_manifest_payload",
+                 "tag_version", "resolve_tag"):
+        assert not hasattr(acid_lite, gone), gone
+

@@ -1889,6 +1889,25 @@ def test_png_codec_round_trip_and_filters():
         decode_png_rgb8(bytes(bad))
 
 
+def test_huff_lut_cache_evicts_oldest_first(monkeypatch):
+    """The JPEG Huffman LUT cache is bounded FIFO: past the cap ONE
+    entry (the oldest) is evicted, never the whole cache, so the
+    newest table is always cached."""
+    from datastore_mapper_spark.operators import multimodal as mm
+
+    monkeypatch.setattr(mm, "_HUFF_LUT_CACHE", {})
+    bits = [0, 2] + [0] * 15  # two 1-bit codes
+    keys = []
+    for i in range(mm._HUFF_LUT_CACHE_MAX + 1):
+        vals = bytes([i & 0xFF, i >> 8])
+        mm._huff_lut(bits, vals)
+        keys.append((bytes(bits), vals))
+    assert len(mm._HUFF_LUT_CACHE) == mm._HUFF_LUT_CACHE_MAX
+    assert keys[-1] in mm._HUFF_LUT_CACHE
+    assert keys[0] not in mm._HUFF_LUT_CACHE
+    assert keys[1] in mm._HUFF_LUT_CACHE
+
+
 def test_jpeg_codec_round_trips():
     """Baseline JPEG codec: constant 8x8 blocks (DC-only spectra with
     the all-ones quant table) must round-trip EXACTLY; arbitrary
